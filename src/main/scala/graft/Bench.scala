@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs the BASELINE.md headline queries (B3 Q1-like
   * agg, B5 5-way join, B8 top-k, A2 ORC roundtrip, C3 cosine top-k)
   * against SPARK_GRAFT_SF_DIR and prints one JSON line. Results are
@@ -186,16 +184,7 @@ object Bench {
   }
 
   private def runInProcess(queries: Seq[String], sfDir: String): Seq[(String, Double)] = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.mainSession(4)
     // untimed warmup: JIT/codegen + parquet footer cache, so per-query
     // numbers measure execution rather than first-touch JVM costs.
     // Routed through Relational.table so the schema memo (round-14) is
@@ -239,7 +228,7 @@ object Bench {
     * against a bench that honors $SPARK_GRAFT_CPUS but didn't say so). */
   private def emit(results: Seq[(String, Double)], sf1Extra: Seq[(String, Double)],
                    sfDir: String, extra: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Graft.envCpus(4)
     val qs = (results ++ sf1Extra).map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

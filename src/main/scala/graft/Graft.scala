@@ -28,4 +28,45 @@ object Graft {
     functions.GraftFunctions.register(s)
     s
   }
+
+  /** `SPARK_GRAFT_CPUS` as a core count: `default` when unset, a
+    * positive integer otherwise; anything else fails with a clear
+    * message rather than reaching a master URL or a JSON artifact. */
+  private[graft] def parseCpus(raw: Option[String], default: Int): Int =
+    raw.fold(default) { s =>
+      s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+    }
+
+  private[graft] def envCpus(default: Int): Int =
+    parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), default)
+
+  /** `SPARK_GRAFT_CONF="graft.pack.shardSpan=64,other.key=v"`: runtime
+    * confs for sweep variants. Ops (and their oracle SQL, e.g. c15's
+    * shard span) read these through the session, so a swept knob stays
+    * in sync with its oracle by construction. */
+  private[graft] def parseConfs(raw: String): Seq[(String, String)] =
+    raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entries must be key=value, got '$kv'")
+      }
+    }
+
+  /** The session every graft main runs on: [[builder]] at
+    * `local[SPARK_GRAFT_CPUS]` (else `defaultCpus`) with that many
+    * shuffle partitions and the UI off, then the caller's own tuning
+    * `confs`, then `SPARK_GRAFT_CONF` on top. */
+  private[graft] def mainSession(defaultCpus: Int, confs: (String, String)*): SparkSession = {
+    val cpus = envCpus(defaultCpus)
+    val spark = confs.foldLeft(builder(s"local[$cpus]", cpus)
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    parseConfs(sys.env.getOrElse("SPARK_GRAFT_CONF", "")).foreach { case (k, v) =>
+      spark.conf.set(k, v)
+    }
+    spark
+  }
 }

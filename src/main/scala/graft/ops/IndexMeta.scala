@@ -127,6 +127,14 @@ private[graft] object IndexMeta {
   def requireLiveVectors(spark: SparkSession, indexDir: String): String =
     requireLive(spark, indexDir, "vectors")
 
+  /** Cache key of a source listing: the first 128 bits of its SHA-256,
+    * in hex. A 32-bit `String.hashCode` collides on inputs as short as
+    * "Aa" / "BB", and a collision would serve another source's index. */
+  private[ops] def fingerprint(listing: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(16).map(b => f"${b & 0xff}%02x").mkString
+
   /** Fingerprint-keyed derived-index cache under `graft.index.root`
     * (default java.io.tmpdir): the index is a pure function of the
     * source files, so same (name, length, mtime) set ⇒ same index and
@@ -139,8 +147,9 @@ private[graft] object IndexMeta {
   def ensureDerived(spark: SparkSession, sourceDir: String, prefix: String)
                    (ready: String => Boolean)(build: String => Unit): String = {
     val files = list(spark, sourceDir).filter(_.isFile)
-    val fp = files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-      .sorted.mkString("|").hashCode.toHexString
+    val fp = fingerprint(files
+      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString("|"))
     val tmpRoot = spark.conf.getOption("graft.index.root")
       .getOrElse(System.getProperty("java.io.tmpdir"))
     list(spark, tmpRoot)

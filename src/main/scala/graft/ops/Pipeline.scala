@@ -1525,13 +1525,12 @@ object Pipeline {
     * and the generation protocol means a reader mid-stream always
     * sees a complete consistent snapshot. */
   private[graft] def lexIngestStreamOn(spark: SparkSession, lexDir: String,
-      arrivals: DataFrame, name: String,
-      nSlices: Int = Relational.replaySlices): Unit = {
+      arrivals: DataFrame, name: String): Unit = {
     import org.apache.spark.sql.{Dataset, Row}
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val src = arrivals.select(col("doc_id"), col("text"))
-    val stage = Relational.stageSlices(spark, src, col("doc_id"), s"${name}_stage", nSlices)
+    val stage = Relational.stageSlices(spark, src, col("doc_id"), s"${name}_stage")
     val base = Paths.get(System.getProperty("java.io.tmpdir"),
       s"sink_${spark.sparkContext.applicationId}_$name")
     if (Files.exists(base)) {
@@ -1558,27 +1557,6 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-  }
-
-  /** Steady-state soak leg for the lexical store (the
-    * [[Similarity.nearDupSteadyState]] shape): fit on the 95% slice,
-    * stream ONLY the held-out 5% in `nBatches` equal micro-batches —
-    * each `[stream-batch]` stderr line prices one arrival batch at
-    * fixed index scale, with the default segment-census cadence
-    * folding the store in-run — then answer the shared query batch
-    * from the soaked index. The census the soak contract asserts is
-    * the live SEGMENT count ([[lexSegmentCount]]), bounded by
-    * `graft.lex.maxSegments`. */
-  def lexSteadyState(spark: SparkSession, dir: String,
-      nBatches: Int): (DataFrame, String) = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val lexDir = Similarity.freshScratch(spark, s"graft_lex_steady_${key}_")
-    val docs = Relational.table(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    fitLexIndex(docs.filter(col("doc_id") % 20 =!= 7), lexDir)
-    lexIngestStreamOn(spark, lexDir, docs.filter(col("doc_id") % 20 === 7),
-      s"graft_steady_lex_$key", nBatches)
-    (sparseScoreIndexed(spark, lexDir, batchQueryFrames(spark, dir)._1), lexDir)
   }
 
   /** C43f registry wrapper: c43d's exact split and query batch, but

@@ -15,29 +15,21 @@ import org.apache.spark.sql.functions._
  */
 object Relational {
 
-  /** Read a testdata table. When `graft.catalog.statsDir` names this
-    * dir (set by [[graft.tools.TableStats.register]], which ANALYZEd
-    * the same parquet files as catalog tables), resolve through the
-    * catalog instead — the relation then carries row-count/column
-    * stats and CBO prices filters per-relation, which is what lets a
-    * filtered dim list broadcast at sf100 without a static threshold
-    * posture. Otherwise a parquet read of the same files, through the
-    * schema memo below (round-14 optimization). */
+  /** Read a testdata table: a parquet read through the schema memo
+    * below (round-14 optimization). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else if (spark.conf.getOption("graft.catalog.statsDir").contains(dir) &&
-             spark.catalog.tableExists(name)) spark.table(name)
     else cachedSchemaParquet(spark, s"$dir/$name.parquet")
 
   /** Schema-memoized parquet read (round-14). A bare
     * `spark.read.parquet(path)` re-infers the schema on EVERY
     * DataFrame construction, and parquet inference is a footer-reading
     * Spark JOB (`mergeSchemasInParallel`) — measured ~80 ms per table
-    * per construction on local[32] (SchemaCostProbe: 0.40 s vs 0.04 s
-    * for the 5 b5 tables), and at 100 TB a footer sample over a
-    * multi-million-file table, re-paid per query. Production fixes
-    * this with catalog tables (the statsDir branch above); this memo
-    * gives the bare-path read the same property: infer ONCE per
+    * per construction on local[32] (0.40 s vs 0.04 s for the 5 b5
+    * tables, OPTIMIZATION_r14.md §1), and at 100 TB a footer
+    * sample over a multi-million-file table, re-paid per query.
+    * Production fixes this with catalog tables; this memo gives the
+    * bare-path read the same property: infer ONCE per
     * (conf-posture, path, listing signature), then construct with the
     * explicit schema — `spark.read.schema(s)` skips inference
     * entirely. The signature (name/mtime/len of every file) revalidates
@@ -619,8 +611,8 @@ object Relational {
     *     → crosses ≈ sf380, q19's part ~43 MB → ≈ sf2500, the LIKE
     *     sites ~7 MB → far out — mechanizing the prose boundaries,
     *     customer first exactly as the comments used to say);
-    *   - when CBO is enabled (`spark.sql.cbo.enabled`, the
-    *     SPARK_GRAFT_STATS path) and the predicate is ESTIMABLE by
+    *   - when CBO is enabled (`spark.sql.cbo.enabled`, with catalog
+    *     column stats) and the predicate is ESTIMABLE by
     *     column stats (equality/range — not contains), the hint
     *     yields to the stats.
     * Returns `/*+ BROADCAST(…) */ ` or the empty string; boundaries
@@ -814,7 +806,8 @@ object Relational {
   // 2–3-column list estimated 71.7 MB and the join fell to
   // SortMergeJoin, shuffling 4.69 GB of lineitem that sf10 never
   // shuffles (round-11's one weak perf cell). CBO stats also fix this
-  // one (brand/size are estimable — see tools/TableStats), but the
+  // one (brand/size are estimable — BASELINE.md "Round 12: q19 weak
+  // cell killed; broadcast mechanism A/B"), but the
   // hint makes the REGISTRY plan right without a stats setup step.
   // Boundary: [[dimHint]] — ~9% of part × 3 columns; the hint
   // self-disables when the estimated build exceeds
@@ -975,7 +968,8 @@ object Relational {
   // BROADCAST(part): for a contains-filtered dim the hint is the ONLY
   // correct mechanism — CBO cannot estimate LIKE '%…%' (selectivity
   // stays 1.0) and prices the list at raw width (~1.4 GB at sf100,
-  // measured via tools/TableStats), so stats make this WORSE, while
+  // BASELINE.md "Round 12: q19 weak cell killed; broadcast mechanism
+  // A/B"), so stats make this WORSE, while
   // the un-stats'd estimate (32–72 MB) sat above the default
   // threshold and shuffled 19.5 GB at sf100. Author knowledge: the
   // '%gizmo%' list is ~5% of part. Boundary via [[dimHint]]
@@ -1182,13 +1176,13 @@ object Relational {
       .orderBy("bucket")
   }
 
-  /** Stage a (converted) events DataFrame as `n` single-file parquet
+  /** Stage a (converted) events DataFrame as [[replaySlices]] single-file parquet
     * slices partitioned by event-time range, modification times ascending
     * so the file source replays them oldest-first — a faithful stand-in
     * for files landing over time. Replay harness only (bounded passes
     * over one table); production streams read their real file feed. */
-  private[ops] def stageEventFiles(spark: SparkSession, ev: DataFrame, name: String, n: Int = 4): String =
-    stageSlices(spark, ev, unix_micros(col("ts")), name, n)
+  private[ops] def stageEventFiles(spark: SparkSession, ev: DataFrame, name: String): String =
+    stageSlices(spark, ev, unix_micros(col("ts")), name)
 
   /** Run a streaming frame through an AvailableNow micro-batch replay
     * into a parquet FILE sink and read the committed output back as a
@@ -1237,7 +1231,7 @@ object Relational {
   private[graft] def sliceStep(lo: Long, hi: Long, n: Int): Long =
     math.max(1L, (hi - lo) / n + 1)
 
-  /** Generalized replay stager: slice any frame into `n` single-file
+  /** Generalized replay stager: slice any frame into [[replaySlices]] single-file
     * parquet slices by the range of a long-valued ordering column.
     *
     * LOCAL-TEST-HARNESS-ONLY by contract: this stager (and the replay
@@ -1250,7 +1244,7 @@ object Relational {
     * concern; nothing on an index or query path reads this code
     * (the IndexMeta layer is the portable one — round-7 verdict). */
   private[ops] def stageSlices(spark: SparkSession, ev: DataFrame, ord: org.apache.spark.sql.Column,
-      name: String, n: Int = replaySlices): String = {
+      name: String): String = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     // applicationId for the same concurrent-process isolation as the
@@ -1264,6 +1258,7 @@ object Relational {
     Files.createDirectories(stage)
     val b = ev.agg(min(ord).as("lo"), max(ord).as("hi")).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val n = replaySlices
     val step = sliceStep(lo, hi, n)
     // write the n slices CONCURRENTLY (each is a coalesce(1) single-task
     // job, so serial staging uses one core of 32 — at the sf100 events

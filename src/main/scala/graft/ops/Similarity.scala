@@ -681,12 +681,10 @@ object Similarity {
     * store at `idx`; returns the store's complete pair set. Spec entry
     * point for planted-arrival cross-batch proofs. */
   private[graft] def dedupStreamNearStoreOn(spark: SparkSession, idx: String,
-      arrivals: DataFrame, name: String,
-      nSlices: Int = Relational.replaySlices): DataFrame = {
+      arrivals: DataFrame, name: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val stage = Relational.stageSlices(spark, arrivals, col("doc_id"), s"${name}_stage",
-      nSlices)
+    val stage = Relational.stageSlices(spark, arrivals, col("doc_id"), s"${name}_stage")
     // checkpoint-only harness dir (the sink IS the store)
     val base = Paths.get(System.getProperty("java.io.tmpdir"),
       s"sink_${spark.sparkContext.applicationId}_$name")
@@ -717,8 +715,8 @@ object Similarity {
           val compacted = exact && n > mf
           // census telemetry: the long-soak rehearsal reads these
           // lines to prove the file count stays BOUNDED across the
-          // horizon, not just that compactions happen
-          // (SteadyStateStream asserts the bound with a true listing)
+          // horizon, not just that compactions happen (BASELINE.md
+          // "Round 11: streaming long-soak — 32 batches, cadence active")
           val (shown, mark) =
             if (compacted) {
               compactNearDupIndex(spark, idx)
@@ -1418,53 +1416,6 @@ object Similarity {
     * held-outs — the last group arrives ≥2 micro-batches after its
     * originals, so catching it requires the stream to have folded the
     * earlier batches' survivors into the index. */
-  /** STEADY-STATE streaming rehearsal entries (round-10): the decade
-    * replay tables measured per-batch cost while streaming the WHOLE
-    * corpus against a growing index — honest for a cold backfill, but
-    * confounded for capacity planning, where the question is "what does
-    * one arrival batch cost once the index is at full scale?". Here the
-    * index/store is PREBUILT from the 95% slice, and only the held-out
-    * 5% streams, in `nBatches` equal micro-batches — each batch grows
-    * the index < 1%, so the per-batch `[stream-batch]` telemetry reads
-    * out the flat steady-state ingest cost (BASELINE.md round-10
-    * table). Consumed by [[graft.tools.SteadyStateStream]]. */
-  def semanticSteadyState(spark: SparkSession, dir: String,
-      nBatches: Int): (DataFrame, String) = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val idx = freshScratch(spark, s"graft_sem_steady_${key}_")
-    val e = Relational.table(spark, dir, "embeddings")
-    val corpus = e.filter(col("vec_id") % 20 =!= 7)
-    buildIvfIndexFrom(spark, corpus.select(col("vec_id"), col("embedding")), idx)
-    val arrivals = e.filter(col("vec_id") % 20 === 7)
-      .select(col("vec_id"), col("embedding"))
-    val stage = Relational.stageSlices(spark, arrivals, col("vec_id"),
-      s"graft_steady_sem_stage_$key", nBatches)
-    (dedupSemanticStream(spark, idx, stage, arrivals.schema,
-      s"graft_steady_sem_sink_$key"), idx)
-  }
-
-  /** Near-dup store twin of [[semanticSteadyState]]. */
-  def nearDupSteadyState(spark: SparkSession, dir: String,
-      nBatches: Int): (DataFrame, String) = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val idx = freshScratch(spark, s"graft_nd_steady_${key}_")
-    val docs = Relational.table(spark, dir, "documents")
-    buildNearDupIndex(spark, docs.filter(col("doc_id") % 20 =!= 7), idx)
-    (dedupStreamNearStoreOn(spark, idx, docs.filter(col("doc_id") % 20 === 7),
-      s"graft_steady_nd_$key", nBatches), idx)
-  }
-
-  /** Post-run file census of a steady-state index/store (max across the
-    * near-dup tables; the live layout for the IVF index) — what the
-    * long-soak rehearsal asserts against `graft.stream.compactMaxFiles`. */
-  def steadyStateCensus(spark: SparkSession, store: String, idx: String): Long =
-    store match {
-      case "seminc" => IndexMeta.countUnder(spark, liveVectorsPath(spark, idx), ".parquet")
-      case _ => Seq("shingles", "bands", "pairs")
-        .map(t => IndexMeta.countUnder(spark, nearDupTablePath(spark, idx, t), ".parquet"))
-        .max
-    }
-
   def dedupSemanticStreamQuery(spark: SparkSession, dir: String): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val idx = freshScratch(spark, s"graft_sem_stream_${key}_")
@@ -1613,32 +1564,14 @@ object Similarity {
     * comes from one metadata-side aggregate (no embedding scan). The cell
     * scan stays partition-pruned for any non-degenerate s; approximate
     * → rows-only, recall vs [[simTopKFiltered]] pinned in TierCSpec. */
-  /** Filter selectivity for probe widening: ZERO scans under the
-    * catalog posture, one metadata pass otherwise (round-15, verdict
-    * item 3 — guide §7.3: even one full metadata pass per probe is
-    * driver-adjacent work a standing service should answer from its
-    * catalog). When the metadata table was ANALYZEd
-    * ([[graft.tools.TableStats.register]] with the table in scope) the
-    * planner's own CBO row-count estimates answer |filtered| / |total|
-    * from stored stats — no job at all; otherwise fall back to the
-    * round-14 single-aggregate form (one pass, both counts together).
-    * The CBO equality estimate prices a value at 1/ndv of the column,
-    * which UNDER-reads a hot value's true fraction — that widens the
-    * probe set, the recall-safe direction for a post-filtered ANN
-    * probe (a widened probe can only add candidates). Both branches
-    * clamp to [1e-9, 1]. */
-  private[graft] def filterSelectivity(spark: SparkSession, docs: DataFrame,
+  /** Filter selectivity for probe widening: |filtered| / |total| from
+    * one metadata-side aggregate (one pass, both counts together),
+    * clamped below at 1e-9. */
+  private[graft] def filterSelectivity(docs: DataFrame,
       pred: org.apache.spark.sql.Column): Double = {
-    val est = for {
-      k <- docs.filter(pred).queryExecution.optimizedPlan.stats.rowCount
-      n <- docs.queryExecution.optimizedPlan.stats.rowCount
-      if n > 0
-    } yield k.toDouble / n.toDouble
-    est.map(s => math.min(1.0, math.max(s, 1e-9))).getOrElse {
-      val selRow = docs.agg(count(lit(1)).as("n"),
-        count(when(pred, 1)).as("k")).head()
-      math.max(selRow.getLong(1).toDouble / math.max(1L, selRow.getLong(0)), 1e-9)
-    }
+    val selRow = docs.agg(count(lit(1)).as("n"),
+      count(when(pred, 1)).as("k")).head()
+    math.max(selRow.getLong(1).toDouble / math.max(1L, selRow.getLong(0)), 1e-9)
   }
 
   /** Centroids and the vec_id=0 query embedding in ONE driver
@@ -1671,7 +1604,7 @@ object Similarity {
     val docs = Relational.table(spark, dir, "documents")
     val allowed = docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
     // catalog-stats selectivity, single-aggregate fallback (see helper)
-    val sel = filterSelectivity(spark, docs, col("lang") === "en")
+    val sel = filterSelectivity(docs, col("lang") === "en")
     val vectors = liveIndexVectors(spark, indexDir)
     // centroids + query vector in one job (see centroidsAndQuery)
     val (cents, qVec) = centroidsAndQuery(spark, indexDir, vectors)
@@ -2156,7 +2089,7 @@ object Similarity {
     val allowed = docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
     // catalog-stats selectivity, single-aggregate fallback (see
     // [[filterSelectivity]] at annIvfFiltered)
-    val sel = filterSelectivity(spark, docs, col("lang") === "en")
+    val sel = filterSelectivity(docs, col("lang") === "en")
     pqIndexedCore(spark, indexDir, Some((allowed, sel)))
   }
 
@@ -2805,12 +2738,11 @@ object Similarity {
     * needs an out-of-band maintenance job. Single writer by
     * construction (foreachBatch batches are sequential). */
   private[graft] def ragIngestStreamOn(spark: SparkSession, idx: String,
-      arrivals: DataFrame, name: String,
-      nSlices: Int = Relational.replaySlices): Unit = {
+      arrivals: DataFrame, name: String): Unit = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val src = arrivals.select(col("doc_id"), col("text"))
-    val stage = Relational.stageSlices(spark, src, col("doc_id"), s"${name}_stage", nSlices)
+    val stage = Relational.stageSlices(spark, src, col("doc_id"), s"${name}_stage")
     val base = Paths.get(System.getProperty("java.io.tmpdir"),
       s"sink_${spark.sparkContext.applicationId}_$name")
     if (Files.exists(base)) {
@@ -2953,6 +2885,9 @@ object Similarity {
     // centroids collect runs alone, as before
     val centsDf = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids")
       .select(col("cell"), col("centroid"))
+    def requireCentroids(rows: Array[org.apache.spark.sql.Row]): Unit =
+      require(rows.nonEmpty, s"index at $indexDir has no centroids — " +
+        "nothing to assign the batch to; rebuild the index")
     val cents =
       if (spark.conf.getOption("graft.index.appendIdCheck").forall(_.toBoolean)) {
         val physicalIds = idsGen.map(Relational.cachedSchemaParquet(spark, _))
@@ -2960,8 +2895,10 @@ object Similarity {
         val rows = centsDf.crossJoin(physicalIds
           .join(broadcast(newVectors.select(col("vec_id"))), Seq("vec_id"), "left_semi")
           .limit(5).agg(collect_list(col("vec_id")).as("live_clash"))).collect()
-        val liveClash = rows.headOption
-          .map(_.getAs[scala.collection.Seq[Long]]("live_clash")).getOrElse(Nil)
+        // zero centroids make the cross join empty, which would read
+        // as "no clash" and let the sidecar write below run
+        requireCentroids(rows)
+        val liveClash = rows.head.getAs[scala.collection.Seq[Long]]("live_clash")
         require(liveClash.isEmpty,
           s"batch re-inserts ids already live in the index ${liveClash.mkString(", ")} — " +
             "every probe would serve two rows per id. Dedup the batch against " +
@@ -2969,7 +2906,11 @@ object Similarity {
             "If a previous append of THIS batch crashed between its sidecar " +
             "and layout writes, repair with rebuildIdsSidecar and re-run.")
         rows.map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-      } else centsDf.collect().map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
+      } else {
+        val rows = centsDf.collect()
+        requireCentroids(rows)
+        rows.map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
+      }
     // Sidecar lands BEFORE the layout (one small file, job-committed):
     // a crash between the two writes leaves the sidecar a SUPERSET of
     // the layout, so the bare re-run fails LOUDLY on the guard above
@@ -2998,7 +2939,7 @@ object Similarity {
       // Without it every writer task emits a file per cell it holds
       // (tasks×cells files per batch) — measured at sf10 that made 8
       // appends of 5% cost MORE than a full rebuild, purely in file
-      // creation (IndexLifecycle rehearsal, BASELINE.md round 6).
+      // creation (BASELINE.md "Index lifecycle rehearsal (round 6)").
       .repartition(col("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(vecDir)
@@ -3385,16 +3326,17 @@ object Similarity {
         // `graft.semdedup.coarseProbes` (default 2): search the top-b
         // coarse branches, not just the nearest — the standard FAISS
         // coarse-nprobe knob that closes the hierarchical probe's
-        // coarse-boundary recall dip. b=2 is the default because the
-        // CoarseProbeSweep table shows it recovering 1000/1000 planted
-        // twins at sf10e AND sf100e — parity-or-better vs the FLAT
-        // reference (999/1000 at sf100e) — at 1.34–1.43× probe cost,
-        // still well under the flat probe's total cost (HierProbe:
-        // 32.8 s vs 43.0 s at 19k cells). b=1 stays available as the
-        // opt-in economy mode (993–995/1000 measured). Placement is
-        // b-INVARIANT (TwoLevelCells element 1 is always the nearest
-        // branch's best cell), so probe width can change over an
-        // index's lifetime without re-placing.
+        // coarse-boundary recall dip. b=2 is the default because
+        // BASELINE.md "Round 10: multi-branch coarse probe closes the
+        // recall dip" shows it recovering 1000/1000 planted twins at
+        // sf10e AND sf100e — parity-or-better vs the FLAT reference
+        // (999/1000 at sf100e) — at 1.34–1.43× probe cost, still well
+        // under the flat probe's total cost (32.8 s vs 43.0 s at 19k
+        // cells, BASELINE.md "Round 10: new queries at sf10"). b=1
+        // stays available as the opt-in economy mode (993–995/1000
+        // measured). Placement is b-INVARIANT (TwoLevelCells element
+        // 1 is always the nearest branch's best cell), so probe width
+        // can change over an index's lifetime without re-placing.
         val b = spark.conf.getOption("graft.semdedup.coarseProbes")
           .map(_.toInt).getOrElse(2)
         twoLevelCellsColOf(col("embedding"), coFlat, flat, dim, k2, nprobe, b)

@@ -1287,15 +1287,13 @@ object Training {
     * through its own append protocol, so a reader mid-stream sees
     * consistent store snapshots. */
   private[graft] def pretrainIngestStreamOn(spark: SparkSession, stateDir: String,
-      arrivals: DataFrame, name: String,
-      nSlices: Int = Relational.replaySlices): Unit = {
+      arrivals: DataFrame, name: String): Unit = {
     import org.apache.spark.sql.{Dataset, Row}
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val src = arrivals.select(col("doc_id"), col("text"), col("lang"),
       col("source"), col("n_chars"))
-    val stage = Relational.stageSlices(spark, src, col("doc_id"),
-      s"${name}_stage", nSlices)
+    val stage = Relational.stageSlices(spark, src, col("doc_id"), s"${name}_stage")
     val base = Paths.get(System.getProperty("java.io.tmpdir"),
       s"sink_${spark.sparkContext.applicationId}_$name")
     if (Files.exists(base)) {
@@ -1341,33 +1339,6 @@ object Training {
       s"graft_c33c_$key")
     readPretrainShards(spark, st)
   }
-
-  /** Steady-state soak leg for the pretrain chain (the
-    * [[Pipeline.lexSteadyState]] shape): build the state on the FIRST
-    * 95% of the id range — id-ordered, not modulus-split, because the
-    * watermark guard enforces crawl order — then stream ONLY the top
-    * 5% in `nBatches` micro-batches, each `[stream-batch]`/`[bpe-oov]`
-    * stderr line pricing one arrival at fixed state scale; answer the
-    * shard census from the soaked state. */
-  def pretrainSteadyState(spark: SparkSession, dir: String,
-      nBatches: Int): (DataFrame, String) = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val st = Similarity.freshScratch(spark, s"graft_pre_steady_${key}_")
-    val docs = Relational.table(spark, dir, "documents")
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val cut = maxId * 95 / 100
-    buildPretrainState(spark, docs.filter(col("doc_id") <= cut), st)
-    pretrainIngestStreamOn(spark, st, docs.filter(col("doc_id") > cut),
-      s"graft_steady_pre_$key", nBatches)
-    (readPretrainShards(spark, st), st)
-  }
-
-  /** Live slice-dir count — the soak census. One dir per build/ingest:
-    * the crawl-dated layout ACCUMULATES by design (a training loader
-    * wants the slice tree; only takedown compaction rewrites dirs), so
-    * this census REPORTS, it does not bound. */
-  def pretrainSliceCount(spark: SparkSession, stateDir: String): Long =
-    liveSlices(spark, stateDir).size.toLong
 
   // ------------------------------ C35 span-level decontamination
 

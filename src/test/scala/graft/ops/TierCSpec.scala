@@ -435,7 +435,8 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // graft.semdedup.coarseProbes = the FAISS-style coarse-nprobe knob:
     // search the top-b coarse branches instead of only the nearest —
     // the production answer to the hierarchical probe's coarse-boundary
-    // recall dip (DispatchProbe: 993-995/1000 planted twins at b=1 vs
+    // recall dip (BASELINE.md "Round 10: multi-branch coarse probe
+    // closes the recall dip": 993-995/1000 planted twins at b=1 vs
     // the flat index's 999-1000). Three pinned properties: b=2 drops
     // are a SUPERSET of b=1 (TwoLevelCells prefix monotonicity made
     // structural), b=2 drops match the FLAT index's at this scale
@@ -1294,6 +1295,32 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
         e.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")))
     }
     assert(ex.getMessage.contains("already live"))
+  }
+
+  test("C3 index append: an index with zero centroids throws before the ids sidecar moves") {
+    import scala.jdk.CollectionConverters._
+    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_nocent_spec").toString
+    val e = Relational.table(spark, dir, "embeddings")
+    Similarity.buildIvfIndexFrom(spark,
+      e.filter(col("vec_id") < 100).select(col("vec_id"), col("embedding")), indexDir)
+    // empty the codebook in place: a zero-row table with the same schema
+    val centroids = s"$indexDir/centroids"
+    val schema = spark.read.parquet(centroids).schema
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .write.mode("overwrite").parquet(centroids)
+    def idsState() = {
+      val g = graft.ops.IndexMeta.liveGen(spark, indexDir, "ids").get.toString
+      g -> java.nio.file.Files.list(java.nio.file.Paths.get(g.stripPrefix("file:")))
+        .iterator.asScala.map(_.getFileName.toString).toSet
+    }
+    val before = idsState()
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.appendToIvfIndex(spark, indexDir,
+        e.filter(col("vec_id") >= 100 && col("vec_id") < 110)
+          .select(col("vec_id"), col("embedding")))
+    }
+    assert(ex.getMessage.contains("no centroids"))
+    assert(idsState() === before, "the failed append wrote to the ids sidecar")
   }
 
   test("C3 index: the ids sidecar mirrors the layout and bounds the guard's file opens") {

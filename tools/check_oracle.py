@@ -1,4 +1,14 @@
-import duckdb, json, glob, sys, math, os
+"""DuckDB oracle gate over a graft.Verify dump.
+
+Usage: python3 tools/check_oracle.py [sfDir] [verifyOutDir]
+
+For every key in oracle_sql.json, run the oracle SQL in DuckDB against
+the sfDir tables and compare it with the Spark dump: column set, typed
+parity, row count and values. Every dumped key with no oracle entry is
+reported as no_oracle with its row count; an empty one is a failure.
+Exits 1 on any failure, 0 otherwise.
+"""
+import duckdb, json, glob, sys, os
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_m3"
 con = duckdb.connect()
@@ -84,5 +94,19 @@ for name, sql in sorted(oracle.items()):
             print(f"OK   {name} ({len(o)} rows)")
     except Exception as e:
         fails.append((name, f"ERROR {e}"))
+# keys DuckDB cannot oracle: a dump with rows is all this gate can check
+no_oracle = sorted(d for d in os.listdir(outdir)
+                   if d not in oracle and os.path.isdir(os.path.join(outdir, d)))
+for name in no_oracle:
+    try:
+        n = con.execute(f"SELECT count(*) FROM '{outdir}/{name}/*.parquet'").fetchone()[0]
+    except Exception as e:
+        fails.append((name, f"ERROR reading no-oracle dump: {e}")); continue
+    if n == 0:
+        fails.append((name, "no_oracle dump is EMPTY"))
+    else:
+        print(f"no_oracle {name} rows={n}")
 for name, msg in fails: print(f"FAIL {name}: {msg}")
-print(f"\n{len(oracle)-len(fails)-skipped}/{len(oracle)} matched ({skipped} skipped)")
+print(f"\n{len(oracle)-len([f for f in fails if f[0] in oracle])-skipped}/{len(oracle)} matched "
+      f"({skipped} skipped), {len(no_oracle)} no_oracle, {len(fails)} failed")
+sys.exit(1 if fails else 0)
